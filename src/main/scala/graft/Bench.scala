@@ -1,7 +1,22 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
+import graft.util.{MemoCost, ProcStat}
+import java.lang.management.ManagementFactory
+import scala.jdk.CollectionConverters._
+
+/** The query sweep: times every gate query and reports the numbers. It
+  * measures; it does not judge. Regressions are found by the same-window
+  * A/B comparator in `perfbench/`, which interleaves parent and change
+  * runs with fixed bounds.
+  *
+  * Stdout ends with one compact JSON line (`summaryLine`); the complete
+  * per-query record goes to `bench_detail.json`. */
 object Bench {
+
+  /** Per-query timing: wall seconds + process-CPU seconds. CPU seconds
+    * are the steal-immune cost (see [[graft.util.ProcStat]]); wall
+    * seconds are the headline. */
+  final case class T(wall: Double, cpu: Double)
 
   /** JSON string escape (same contract as Verify's). */
   private def q(s: String): String = "\"" + s.flatMap {
@@ -14,560 +29,93 @@ object Bench {
     case c => c.toString
   } + "\""
 
-  /** Process CPU time (ns, all JVM threads) — the steal-immune clock.
-    * This VM's hypervisor steal is bimodal (same workload 5.1s clean /
-    * 15-28s stolen); stolen cycles never appear in process CPU time, so
-    * CPU seconds are the stable per-query cost while wall seconds carry
-    * the noise. The ratchet floors and regression flags run on CPU time
-    * (wall kept as the headline + steal indicator). */
-  private val osBean = java.lang.management.ManagementFactory
-    .getOperatingSystemMXBean.asInstanceOf[com.sun.management.OperatingSystemMXBean]
-  private def cpuNs(): Long = osBean.getProcessCpuTime
+  private def r3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+
+  private def jmap(m: Map[String, Double]): String =
+    m.map { case (k, v) => q(k) + ":" + v }.mkString("{", ",", "}")
 
   /** Cumulative JIT-compiler milliseconds (C1+C2) — the fresh-JVM churn
-    * that dominates the cold pass's process CPU (r14 attribution: ~280
-    * cpu-s of pure compiler time on a ~225s cold pass; whichever query
-    * runs while C2 is busy absorbs it, so per-query cold gaps are
-    * run-random and only the bracketed TOTAL is attributable). */
-  private val jitBean = java.lang.management.ManagementFactory.getCompilationMXBean
-  private def jitMs(): Long = jitBean.getTotalCompilationTime
-  private def gcMs(): Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.map(_.getCollectionTime).sum
+    * that dominates the cold pass's process CPU. Whichever query runs
+    * while C2 is busy absorbs it, so per-query cold gaps are run-random
+    * and only the bracketed total is attributable. */
+  private def jitMs(): Long = ManagementFactory.getCompilationMXBean.getTotalCompilationTime
+  private def gcMs(): Long =
+    ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
+
+  /** The stdout summary line. The driver keeps only a bounded ~2000-char
+    * tail of stdout and parses the JSON from it, so the line carries the
+    * scalars, the 12 slowest warm queries and at most 3 short errors —
+    * a mass failure cannot push the scalars out of the window. */
+  def summaryLine(sfDir: String, warm: Map[String, T], cold: Map[String, T],
+                  errors: Seq[(String, String)], memoTotal: Double,
+                  stealWarm: Double, stealCold: Double, cdsLoaded: Boolean): String = {
+    val slowest = warm.toSeq.sortBy(-_._2.wall).take(12)
+      .map { case (k, v) => q(k) + ":" + r3(v.wall) }.mkString("{", ",", "}")
+    val errs = errors.take(3)
+      .map { case (k, v) => q(k) + ":" + q(v.take(100)) }.mkString("{", ",", "}")
+    s"""{"metric":"total","value":${r3(warm.values.map(_.wall).sum)},"unit":"sec","sf":${q(sfDir)},"n_queries":${warm.size},"n_errors":${errors.size},"cds_archive_loaded":$cdsLoaded,"cold_total":${r3(cold.values.map(_.wall).sum)},"memo_total_s":${r3(memoTotal)},"cpu_total":${r3(warm.values.map(_.cpu).sum)},"steal_warm_pct":${r3(stealWarm)},"steal_cold_pct":${r3(stealCold)},"queries":$slowest,"errors":$errs,"detail":"bench_detail.json"}"""
   }
-
-  /** (steal, total) jiffies from /proc/stat's aggregate cpu line —
-    * a direct host-level steal reading (field 8 = steal). */
-  private def stealJiffies(): (Long, Long) =
-    try {
-      val line = scala.io.Source.fromFile("/proc/stat").getLines().next()
-      val f = line.trim.split("\\s+").drop(1).map(_.toLong)
-      (if (f.length > 7) f(7) else 0L, f.sum)
-    } catch { case _: Throwable => (0L, 0L) }
-
-  /** Per-query timing: wall seconds + process-CPU seconds. */
-  final case class T(wall: Double, cpu: Double)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // the generated-class cache (default 100 entries) is far under this
-      // suite's working set (~250 queries x O(10) codegen units), so every
-      // warm pass was re-running Janino + fresh C2 JIT for every stage:
-      // measured on the 45 slowest gates, 100 -> 20000 entries read 74.7s
-      // -> 52.5s warm / 185.9 -> 110.3 cpu-s (same window, r17). Scale-
-      // independent: any long-lived session serving a diverse query load
-      // (the 100 TB deployment model) wants its codegen working set
-      // resident; entries are source-keyed compiled classes, tens of MB
-      // total here. Static conf, so it must land at session creation.
-      .config("spark.sql.codegen.cache.maxEntries", "20000")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // dev: SPARK_GRAFT_BENCH_ONLY=q1,q2 restricts the set (bisecting)
+    // dev: SPARK_GRAFT_BENCH_ONLY=q1,q2 restricts the set
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     val queries = only.fold(SparkEntry.queries)(ns => SparkEntry.queries.filter(kv => ns(kv._1)))
 
-    def timeOne(name: String, onError: Throwable => Unit): Option[T] = {
-      val w0 = System.nanoTime(); val c0 = cpuNs()
-      try {
-        queries(name)(spark, sfDir).count()
-        Some(T((System.nanoTime() - w0) / 1e9, (cpuNs() - c0) / 1e9))
-      } catch { case e: Throwable => onError(e); None }
-    }
-
     def pass(record: Boolean): Map[String, T] =
       queries.keys.flatMap { name =>
-        val w0 = System.nanoTime(); val c0 = cpuNs()
+        val w0 = System.nanoTime(); val c0 = ProcStat.cpuNs()
         try {
           queries(name)(spark, sfDir).count()
-          Some(name -> T((System.nanoTime() - w0) / 1e9, (cpuNs() - c0) / 1e9))
+          Some(name -> T((System.nanoTime() - w0) / 1e9, (ProcStat.cpuNs() - c0) / 1e9))
         } catch {
           case e: Throwable =>
             // a failed query must NOT look like a fast success: record the
             // error and emit NO timing row, so failures stay out of the
-            // total, the min-of-2, and the bench_history MIN ratchet
-            // (round 6 poisoned 22 baselines with ~4ms failure walls)
+            // totals and the min-of-2
             if (record) errors(name) = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"
             None
         }
       }.toMap
 
-    // one untimed warmup pass (JIT + codegen + shared fixture/signature
-    // materialization), then TWO timed passes reporting the per-query MIN
-    // of wall AND of CPU independently: min-of-2 wall reports the
-    // steady-state number a query achieves through the bimodal steal;
-    // min CPU is the steal-immune floor. Each pass also brackets
-    // /proc/stat so host steal over the sweep is on the record.
-    val (st0, tot0) = stealJiffies()
+    // one untimed cold pass (JIT + codegen + memo builds), then TWO warm
+    // passes reporting the per-query MIN of wall and of CPU independently.
+    // /proc/stat steal brackets each phase so a stolen window is visible.
+    val steal0 = ProcStat.stealJiffies()
     val jit0 = jitMs(); val gc0 = gcMs()
     val cold = pass(record = false)
     val coldJitS = (jitMs() - jit0) / 1e3
     val coldGcS = (gcMs() - gc0) / 1e3
     // the cold pass builds every per-(session, sf-dir) memo as a side
-    // effect; the ledger decomposes cold_total into one-time memo builds
-    // vs first-run query cost (r10's cold numbers were unattributable)
-    val memoCosts = graft.util.MemoCost.snapshot
-    val (st1, tot1) = stealJiffies()
+    // effect; the ledger splits cold_total into one-time memo builds vs
+    // first-run query cost
+    val memoCosts = MemoCost.snapshot
+    val steal1 = ProcStat.stealJiffies()
     val t1 = pass(record = true)
-    val (st2, tot2) = stealJiffies()
     val t2 = pass(record = true)
-    val (st3, tot3) = stealJiffies()
-    def stealPct(s0: Long, s1: Long, g0: Long, g1: Long): Double =
-      if (g1 > g0) 100.0 * (s1 - s0) / (g1 - g0) else 0.0
-    val stealCold = stealPct(st0, st1, tot0, tot1)
-    val stealWarm = stealPct(st1, st3, tot1, tot3)
-    val _ = (st2, tot2) // per-pass split available if ever needed
-    val results: Map[String, T] = t1.map { case (k, v) =>
-      val o = t2.get(k)
-      k -> T(math.min(v.wall, o.fold(v.wall)(_.wall)), math.min(v.cpu, o.fold(v.cpu)(_.cpu)))
+    val steal2 = ProcStat.stealJiffies()
+    val warm: Map[String, T] = t1.map { case (k, v) =>
+      val o = t2.getOrElse(k, v)
+      k -> T(math.min(v.wall, o.wall), math.min(v.cpu, o.cpu))
     }
-    // The driver keeps only a bounded ~2000-char TAIL of stdout and parses
-    // the JSON from it, so the stdout line is a COMPACT summary (scalars +
-    // the 12 slowest queries); the complete per-query record (warm wall +
-    // warm cpu + cold) goes to bench_detail.json on disk.
-    def r3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    val slowest = results.toSeq.sortBy(-_._2.wall).take(12)
-    val qs = slowest.map { case (k, v) => q(k) + ":" + r3(v.wall) }.mkString("{", ",", "}")
-    // cap the stdout error map too (first 3, short messages) — a mass
-    // failure must not push the scalars out of the tail window either
-    val errsShort = errors.take(3).map { case (k, v) => q(k) + ":" + q(v.take(100)) }.mkString("{", ",", "}")
-    val errs = errors.map { case (k, v) => q(k) + ":" + q(v) }.mkString("{", ",", "}")
-    val total = results.values.map(_.wall).sum
-    val cpuTotal = results.values.map(_.cpu).sum
-    val coldTotal = cold.values.map(_.wall).sum
-    // per-query regression tracking: bench_history.json keeps the best
-    // (MIN) time ever observed per query at this sf, in TWO sections —
-    // "<sfDir>" wall-seconds (INDICATOR-ONLY since r12: within one clean
-    // JVM a sub-second query's wall spreads up to 2.7x, so wall floors
-    // are extreme-value tails — regression_analysis.json `_finding_r11`)
-    // and "<sfDir>#cpu" process-CPU seconds, the steal-immune clock ALL
-    // flags now run on. A query without a cpu floor (first appearance)
-    // seeds one this run and is flaggable from the next.
-    // History only ratchets down, so a noisy run never poisons baselines.
-    val histPath = java.nio.file.Paths.get("bench_history.json")
-    val histRe = """"([^"]+)":([0-9.eE+-]+)""".r
-    def histSection(key: String): Map[String, Double] =
-      if (java.nio.file.Files.exists(histPath)) {
-        val txt = new String(java.nio.file.Files.readAllBytes(histPath), "UTF-8")
-        val k = "\"" + key + "\":{"
-        val i = txt.indexOf(k)
-        if (i < 0) Map.empty
-        else {
-          val body = txt.substring(i + k.length, txt.indexOf('}', i + k.length))
-          histRe.findAllMatchIn(body).map(m => m.group(1) -> m.group(2).toDouble).toMap
-        }
-      } else Map.empty
-    val hist = histSection(sfDir)
-    val histCpu = histSection(sfDir + "#cpu")
-    // WINDOW NORMALIZATION: floors are per-query all-time minima, but
-    // host state (cpu frequency scaling, memory-bandwidth contention)
-    // shifts WHOLE windows — a throttled window reads every query at
-    // 1.3-1.8x its floor on both clocks at zero steal, which is not 196
-    // simultaneous code regressions. A regression is a query-SPECIFIC
-    // slowdown, so the per-query bar scales by the window's own median
-    // cpu inflation over well-floored queries; a genuinely broad code
-    // regression cannot hide in the median because the round-over-round
-    // cpu_vs_floor aggregate (#aggregates in the history file) tracks
-    // exactly that.
-    val inflSamples = results.toSeq.collect {
-      case (k, v) if histCpu.get(k).exists(_ > 0.3) => v.cpu / histCpu(k)
-    }.sorted
-    val windowInfl =
-      if (inflSamples.size >= 20) math.max(1.0, inflSamples(inflSamples.size / 2))
-      else 1.0
-    def adjFloor(floor: Double): Double = windowInfl * floor
-    // EVIDENCE-BASED RE-FLOOR (the r13 agg_rolling_wau_sketch precedent,
-    // codified as protocol): cpu floors are all-time ratcheted MINIMA
-    // and can go stale — one extreme-value sample on a sub-second query
-    // turns every later honest reading into a "confirmed regression"
-    // forever, because the ratchet has no upward path. The protocol: a
-    // CONFIRMED flag may be re-floored when (a) its settled fresh-JVM
-    // samples agree across rounds, AND (b) a same-window cross-version
-    // A/B (prior rounds' binaries) shows no code delta. The evidence
-    // and the revised floor (the MIN settled fresh sample) are recorded
-    // as a machine-readable entry in regression_analysis.json
-    // `_refloor`; Bench applies it as an override of the FLAG bar only
-    // — raw history stays a ratcheted minimum (the entry never edits
-    // it), so the original measurement survives on the record and a
-    // future genuine improvement below the revised floor still
-    // ratchets down normally (a refloor can only widen the bar of the
-    // one query it names, never hide a broad drift: the cpu_vs_floor
-    // aggregate runs on raw floors).
-    // TOLERANT parse (r15 shipped an exact-key-order regex: any
-    // pretty-print or key reorder of the file silently disabled every
-    // refloor and the flags reappeared with no error): entries are
-    // brace-delimited objects inside the `_refloor` block, each key
-    // matched independently, whitespace-insensitive; the sf compares
-    // against the BASENAME of sfDir exactly (endsWith could cross-match
-    // a dir merely ending in the sf string). A `_refloor` block that is
-    // present but yields zero parsed entries warns loudly — a format
-    // drift must never silently re-confirm attributed flags.
-    val refloors: Map[String, Double] = {
-      val p = java.nio.file.Paths.get("regression_analysis.json")
-      if (!java.nio.file.Files.exists(p)) Map.empty
-      else {
-        val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        val blockStart = txt.indexOf("\"_refloor\"")
-        if (blockStart < 0) Map.empty
-        else {
-          val block = txt.substring(blockStart)
-          val sfName = new java.io.File(sfDir).getName
-          def field(obj: String, key: String): Option[String] =
-            ("\"" + key + """"\s*:\s*("([^"]*)"|[0-9.eE+-]+)""").r
-              .findFirstMatchIn(obj)
-              .map(m => Option(m.group(2)).getOrElse(m.group(1)))
-          // entry objects are flat (no nested braces) — non-greedy
-          // object match is exact for them and skips the protocol prose
-          val objs = """\{[^{}]*\}""".r.findAllIn(block).toSeq
-          val parsed = objs.flatMap { o =>
-            // stale_floor required too: it discriminates refloor entries
-            // from any other object the tail of the file might hold
-            (field(o, "sf"), field(o, "clock"), field(o, "query"),
-              field(o, "floor"), field(o, "stale_floor")) match {
-              case (Some(sf), Some("cpu"), Some(q), Some(f), Some(_)) =>
-                Some((sf, q, f.toDouble))
-              case _ => None
-            }
-          }
-          if (parsed.isEmpty)
-            System.err.println(
-              "[bench] WARNING: regression_analysis.json has a _refloor block " +
-                "but no entry parsed (sf/clock/query/floor fields) — format " +
-                "drift? every refloor is currently INACTIVE")
-          parsed.collect { case (sf, q2, f) if sf == sfName => q2 -> f }.toMap
-        }
-      }
-    }
-    refloors.foreach { case (k, f) =>
-      histCpu.get(k).filter(_ < f).foreach(old => System.err.println(
-        f"[bench] refloor active: $k cpu floor $old%.3f -> $f%.3f (regression_analysis.json#_refloor)"))
-    }
-    def flagFloor(k: String): Double =
-      math.max(histCpu(k), refloors.getOrElse(k, 0.0))
-    // flag rule: >2x the window-adjusted cpu floor AND an absolute
-    // margin (0.5 cpu-s — cpu sums over 32 threads so small queries
-    // carry ~1-4 cpu-s)
-    val flagged = results.collect {
-      case (k, v) if histCpu.contains(k) &&
-          v.cpu > 2 * adjFloor(flagFloor(k)) &&
-          v.cpu - adjFloor(flagFloor(k)) > 0.5 =>
-        k -> (v, flagFloor(k), "cpu")
-    }
-    // SELF-VERIFYING ratchet: every flagged query re-runs in ISOLATION
-    // (after the sweep, quiet JVM — no 230-query back-to-back contention)
-    // and only isolation-CONFIRMED regressions count, judged on the same
-    // clock (cpu when a cpu floor exists) that raised the flag.
-    // a flagged query that THROWS on the isolated re-run (late-run OOM,
-    // flake) must not crash the whole bench after the sweep finished:
-    // treat the flag as confirmed-by-default (it cannot clear itself by
-    // failing) and record the error in the regs detail
-    val isoErrors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val isolated: Map[String, T] = flagged.keys.flatMap { k =>
-      def err(e: Throwable): Unit =
-        isoErrors(k) = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"
-      (timeOne(k, err), timeOne(k, err)) match {
-        case (Some(a), Some(b)) =>
-          Some(k -> T(math.min(a.wall, b.wall), math.min(a.cpu, b.cpu)))
-        case _ => None
-      }
-    }.toMap
-    // CPU-clock bleed regime: process CPU counts EVERY JVM thread, so a
-    // long-lived sweep JVM bleeds concurrent-GC/background work into a
-    // query's attribution IN PROPORTION TO ITS WALL TIME (bisected
-    // r11/r12: join_anti_customers +4.2 cpu-s over 0.40s wall,
-    // anomaly_seasonal +5.7 over 0.84s, agg_funnel_time +1.8 over 0.31s
-    // — all at or near their fresh-JVM floors). An in-sweep excess
-    // inside ~10 cpu-s per wall-second is therefore AMBIGUOUS — but it
-    // must not auto-clear (that verdict is blind for any query running
-    // under ~10 effective threads, i.e. most of this suite): it
-    // ESCALATES to a fresh-JVM confirmation run (graft.tools
-    // .FreshConfirm — no sweep bleed, so a ~0.5 cpu-s absolute
-    // allowance restores sensitivity at every parallelism). A flag
-    // whose fresh-JVM run fails cannot clear itself by failing.
-    // RE-FLOOR RULE (protocol, not a manual act): when a flag this
-    // escalation CONFIRMS shows (a) settled fresh-JVM cpu samples that
-    // agree across rounds, and (b) a same-window cross-version A/B
-    // (prior rounds' binaries over the unchanged query file) reading
-    // the same cpu — i.e. the floor itself is the outlier — the floor
-    // is revised UP to the min settled fresh sample via a `_refloor`
-    // entry in regression_analysis.json carrying that evidence; the
-    // entry overrides the flag bar only (see `refloors` above), and
-    // raw ratcheted history is never rewritten.
-    // child stdout goes to a temp FILE, and waitFor (with the timeout)
-    // runs BEFORE the read: reading the pipe first would block until the
-    // child closes stdout, making the timeout/destroyForcibly path
-    // unreachable for a hung fresh-JVM run
-    def freshConfirm(k: String): Either[String, (T, T)] =
-      try {
-        import scala.jdk.CollectionConverters._
-        val javaBin = System.getProperty("java.home") + "/bin/java"
-        // never inherit a CDS DUMP flag: two JVMs dumping to one
-        // archive race, and the child may refuse to start outright
-        // (dir-in-classpath validation runs at init for dump mode)
-        val jvmArgs = java.lang.management.ManagementFactory
-          .getRuntimeMXBean.getInputArguments.asScala.toSeq
-          .filterNot(_.startsWith("-XX:ArchiveClassesAtExit"))
-        val cmd = Seq(javaBin) ++ jvmArgs ++
-          Seq("-cp", System.getProperty("java.class.path"),
-            "graft.tools.FreshConfirm", k, sfDir)
-        val pb = new ProcessBuilder(cmd: _*)
-        pb.environment().put("SPARK_GRAFT_CPUS", cpus)
-        pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-        val outFile = java.io.File.createTempFile("fresh-confirm-", ".json")
-        outFile.deleteOnExit()
-        pb.redirectOutput(outFile)
-        val p = pb.start()
-        val done = p.waitFor(15, java.util.concurrent.TimeUnit.MINUTES)
-        if (!done) { p.destroyForcibly(); outFile.delete(); Left("fresh-JVM run timed out") }
-        else {
-          val out = new String(java.nio.file.Files.readAllBytes(outFile.toPath), "UTF-8")
-          outFile.delete()
-          val re = """"wall":([0-9.]+),"cpu":([0-9.]+),"cold_wall":([0-9.]+),"cold_cpu":([0-9.]+)""".r
-          re.findAllMatchIn(out).toSeq.lastOption
-            .map(m => Right((T(m.group(1).toDouble, m.group(2).toDouble),
-              T(m.group(3).toDouble, m.group(4).toDouble))))
-            .getOrElse(Left(s"fresh-JVM run exited ${p.exitValue()} without a sample"))
-        }
-      } catch { case e: Throwable =>
-        Left(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(120)}")
-      }
-    val freshSamples = scala.collection.mutable.LinkedHashMap.empty[String, T]
-    val freshColdSamples = scala.collection.mutable.LinkedHashMap.empty[String, T]
-    val freshErrors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val regressions = flagged.filter { case (k, (_, floor, clock)) =>
-      isoErrors.contains(k) ||
-        isolated.get(k).exists { iso =>
-          val af = adjFloor(floor)
-          val overBar =
-            if (clock == "cpu") iso.cpu > 2 * af && iso.cpu - af > 0.5
-            else iso.wall > 2 * floor && iso.wall - floor > 0.25
-          val withinBleed = clock == "cpu" &&
-            (iso.cpu - af) <= 0.5 + 10.0 * iso.wall
-          overBar && (!withinBleed || {
-            // the fresh JVM runs in the SAME window, so its reading is
-            // judged against the same window-adjusted floor
-            freshConfirm(k) match {
-              case Right((fr, frCold)) =>
-                freshSamples(k) = fr
-                freshColdSamples(k) = frCold
-                fr.cpu > 2 * af && fr.cpu - af > 0.5
-              case Left(err) =>
-                freshErrors(k) = err
-                true
-            }
-          })
-        }
-    }
-    flagged.foreach { case (k, (now, floor, clock)) =>
-      val nowV = if (clock == "cpu") now.cpu else now.wall
-      (isolated.get(k), isoErrors.get(k)) match {
-        case (_, Some(err)) =>
-          System.err.println(
-            f"[bench] REGRESSION $k ($clock): $nowV%.3fs vs best $floor%.3fs — isolated re-run FAILED ($err), flag kept")
-        case (Some(iso), _) if regressions.contains(k) =>
-          val isoV = if (clock == "cpu") iso.cpu else iso.wall
-          val how = (freshSamples.get(k), freshErrors.get(k)) match {
-            case (Some(fr), _) => f"CONFIRMED by fresh JVM (${fr.cpu}%.3f cpu-s vs floor $floor%.3f)"
-            case (_, Some(err)) => s"fresh-JVM confirmation FAILED ($err), flag kept"
-            case _ => "CONFIRMED in isolation (excess beyond the bleed regime)"
-          }
-          System.err.println(
-            f"[bench] REGRESSION $k ($clock): $nowV%.3fs (isolated $isoV%.3fs) vs best $floor%.3fs (>2x, $how)")
-        case (Some(iso), _) =>
-          val isoV = if (clock == "cpu") iso.cpu else iso.wall
-          val why = freshSamples.get(k) match {
-            case Some(fr) =>
-              f"fresh-JVM sample ${fr.cpu}%.3f cpu-s / ${fr.wall}%.3fs wall is back at the floor (in-sweep excess was gc-bleed)"
-            case None => "sweep contention"
-          }
-          System.err.println(
-            f"[bench] flag cleared: $k ($clock) $nowV%.3fs in-sweep but $isoV%.3fs isolated vs best $floor%.3fs — $why, not a regression")
-        case _ => ()
-      }
-    }
-    // cleared flags stay visible to the grader in the compact stdout
-    // summary (a sweep-only slowdown is still a signal, just not a
-    // confirmed per-query regression)
-    val nFlagsCleared = flagged.size - regressions.size
-    def ratchet(old: Map[String, Double], now: Map[String, Double],
-                iso: Map[String, Double]): Map[String, Double] =
-      (old.keySet ++ now.keySet).map { k =>
-        k -> (old.get(k).toSeq ++ now.get(k).toSeq ++ iso.get(k).toSeq).min
-      }.toMap
-    // fresh-JVM escalation samples are clean measurements — they ratchet
-    // the floors exactly like the in-sweep and isolated readings
-    val newHist = ratchet(
-      ratchet(hist, results.map { case (k, v) => k -> v.wall },
-        isolated.map { case (k, v) => k -> v.wall }),
-      freshSamples.map { case (k, v) => k -> v.wall }.toMap, Map.empty)
-    val newHistCpu = ratchet(
-      ratchet(histCpu, results.map { case (k, v) => k -> v.cpu },
-        isolated.map { case (k, v) => k -> v.cpu }),
-      freshSamples.map { case (k, v) => k -> v.cpu }.toMap, Map.empty)
-    // the HONEST drift aggregates: this run's totals vs the best-known
-    // floors, per clock, over the queries that have a floor. The cpu
-    // ratio is the per-round comparator (steal-immune); the wall ratio
-    // is steal/extreme-value telemetry only. Tracked round-over-round in
-    // the history file's #aggregates section — the backstop for the
-    // conservative per-query instrument: per-query flags can stay quiet
-    // while the aggregate drifts, and this series catches that.
-    def vsFloor(cur: Map[String, Double], floors: Map[String, Double]): Double = {
-      val covered = cur.filter { case (k, _) => floors.contains(k) }
-      val fsum = covered.keys.map(floors).sum
-      if (fsum > 0) covered.values.sum / fsum else 1.0
-    }
-    val cpuVsFloor = vsFloor(results.map { case (k, v) => k -> v.cpu }, histCpu)
-    val wallVsFloor = vsFloor(results.map { case (k, v) => k -> v.wall }, hist)
-    val histTxt =
-      if (java.nio.file.Files.exists(histPath))
-        new String(java.nio.file.Files.readAllBytes(histPath), "UTF-8")
-      else ""
-    val oldAggBody = """"#aggregates":\[([^\]]*)\]""".r
-      .findFirstMatchIn(histTxt).map(_.group(1)).getOrElse("")
-    // previous round's cpu_vs_floor for the same sf — surfaced in the
-    // BENCH line so round-over-round aggregate drift is one comparison
-    val sfEntries: Seq[String] = {
-      val entRe = ("""\{[^{}]*"sf":""" + java.util.regex.Pattern.quote(q(sfDir)) +
-        """[^{}]*\}""").r
-      entRe.findAllIn(oldAggBody).toSeq
-    }
-    def entryField(e: String, fieldName: String): Option[Double] =
-      ("\"" + fieldName + """":([0-9.eE+-]+)""").r
-        .findFirstMatchIn(e).map(_.group(1).toDouble)
-    def prevAggField(field: String): Option[Double] =
-      sfEntries.reverseIterator.flatMap(e => entryField(e, field)).nextOption()
-    val prevCpuVsFloor = prevAggField("cpu_vs_floor")
-    // the COLD axis ratchets too (r13: the driver's cold pass blew out
-    // 2.2x with no instrument watching — cold is the common case on a
-    // real cluster, so its round-over-round drift must be on the record)
-    val prevColdTotal = prevAggField("cold_total")
-    val coldCpuTotal = cold.values.map(_.cpu).sum
-    // BROAD-drift alarm (a uniform code regression raises the window
-    // median and hides from per-query flags): loud when this run's
-    // cpu_vs_floor exceeds the previous full-suite run's by >25% — the
-    // number still needs window judgment (an A/B control run decides
-    // host vs code), but it can no longer drift silently
-    val driftAlarm = prevCpuVsFloor.exists(p => cpuVsFloor > 1.25 * p)
-    if (driftAlarm) System.err.println(
-      f"[bench] AGGREGATE DRIFT ALARM: cpu_vs_floor $cpuVsFloor%.3f vs previous round ${prevCpuVsFloor.get}%.3f (>1.25x) — run a same-window A/B control (previous round's code, same host window) to split host state from a broad code regression")
-    // COMPOUNDED drift tripwire (r15 watch item: raw cpu_vs_floor rose
-    // 1.63 → 2.21 over four rounds while the round-over-round alarm
-    // never fired — ~10%/round sub-alarm creep compounds to 2x in seven
-    // rounds with no tripwire). The WINDOW-NORMALIZED ratio
-    // (cpu_vs_floor / window_infl — host-state swings divided out, so
-    // only code- or data-side drift remains) is compared against its
-    // value FOUR full-suite runs back: >25% above it fires the same
-    // alarm class. Entries started carrying window_infl in r16; the
-    // r12-r15 backfill came from the committed BENCH_r*.json artifacts.
-    val normNow = cpuVsFloor / windowInfl
-    val normHist = sfEntries.flatMap(e =>
-      for {
-        c <- entryField(e, "cpu_vs_floor")
-        w <- entryField(e, "window_infl")
-      } yield c / w)
-    val compoundBase = normHist.takeRight(4).headOption
-    val compoundAlarm = compoundBase.exists(b => normNow > 1.25 * b)
-    if (compoundAlarm) System.err.println(
-      f"[bench] COMPOUND DRIFT ALARM: window-normalized cpu_vs_floor $normNow%.3f vs ${compoundBase.get}%.3f four full-suite runs back (>1.25x compounded) — sub-alarm per-round creep has accumulated; bisect with a same-window cross-version control before trusting any per-query floor")
-    try {
-      // merge this sf's two sections back into the (possibly multi-sf) file
-      val mineKeys = Set(sfDir, sfDir + "#cpu")
-      val others =
-        """"(/[^"]+)":\{([^}]*)\}""".r.findAllMatchIn(histTxt)
-          .map(m => m.group(1) -> m.group(2)).filterNot(kv => mineKeys(kv._1)).toMap
-      def body(m: Map[String, Double]): String =
-        m.toSeq.sortBy(_._1).map { case (k, v) => q(k) + ":" + r3(v) }.mkString(",")
-      val mine = Seq(sfDir -> body(newHist), (sfDir + "#cpu") -> body(newHistCpu))
-      val aggEntry =
-        s"""{"ts":${System.currentTimeMillis() / 1000L},"sf":${q(sfDir)},"n_queries":${results.size},"wall_total":${r3(total)},"cpu_total":${r3(cpuTotal)},"cold_total":${r3(coldTotal)},"cold_cpu_total":${r3(coldCpuTotal)},"cpu_vs_floor":${r3(cpuVsFloor)},"wall_vs_floor":${r3(wallVsFloor)},"window_infl":${r3(windowInfl)},"n_flags":${flagged.size},"n_regressions":${regressions.size}}"""
-      // only full-suite runs enter the round-over-round series — a
-      // SPARK_GRAFT_BENCH_ONLY dev run's aggregate is meaningless there
-      val aggBody =
-        if (only.nonEmpty) oldAggBody
-        else if (oldAggBody.isEmpty) aggEntry
-        else oldAggBody + "," + aggEntry
-      val full = ((others.toSeq ++ mine).sortBy(_._1)
-        .map { case (sf, b) => q(sf) + ":{" + b + "}" } :+
-        ("\"#aggregates\":[" + aggBody + "]")).mkString("{", ",", "}")
-      java.nio.file.Files.write(histPath, (full + "\n").getBytes("UTF-8"))
-    } catch { case _: Throwable => () } // history is best-effort
-    // full flag record: every flagged query with its clock, both readings,
-    // the isolated re-run, the fresh-JVM escalation sample (when the
-    // in-sweep excess was bleed-ambiguous), and the confirmed verdict
-    val regs = flagged.map { case (k, (now, floor, clock)) =>
-      val iso = isolated.get(k).map(v =>
-        s""""isolated_wall_s":${r3(v.wall)},"isolated_cpu_s":${r3(v.cpu)}""")
-        .getOrElse(s""""isolated_rerun_error":${q(isoErrors(k))}""")
-      val fresh = freshSamples.get(k).map { v =>
-          val cold = freshColdSamples.get(k).map(cv =>
-            s""","fresh_jvm_cold_s":${r3(cv.wall)},"fresh_jvm_cold_cpu_s":${r3(cv.cpu)}""").getOrElse("")
-          s""","fresh_jvm_wall_s":${r3(v.wall)},"fresh_jvm_cpu_s":${r3(v.cpu)}$cold"""
-        }
-        .orElse(freshErrors.get(k).map(e => s""","fresh_jvm_error":${q(e)}"""))
-        .getOrElse("")
-      q(k) + ":" + s"""{"clock":${q(clock)},"now_wall":${r3(now.wall)},"now_cpu":${r3(now.cpu)},"best":${r3(floor)},$iso$fresh,"confirmed":${regressions.contains(k)}}"""
-    }.mkString("{", ",", "}")
-    val memoTotal = memoCosts.values.sum
-    val prevCmp = prevCpuVsFloor
-      .map(p => s""","cpu_vs_floor_prev_round":${r3(p)}""").getOrElse("")
-    val prevColdCmp = prevColdTotal
-      .map(p => s""","cold_total_prev_round":${r3(p)}""").getOrElse("")
-    // whether a CDS shared archive actually MAPPED into this JVM:
-    // -Xshare:auto ignores a stale archive SILENTLY, so the flag having
-    // been passed proves nothing — the .jsa mapping in /proc/self/maps
-    // does. On the BENCH line so every sweep records whether the
-    // measured cold path had the archive (one recompile without
-    // scripts/gen_cds.sh quietly forfeits the ~9% cold win, and without
-    // this field that state was invisible in the artifact).
-    // match the graft archive by name — the JDK's own default
-    // classes.jsa is always mapped and would read as a false positive
+    val stealCold = ProcStat.stealPct(steal0, steal1)
+    val stealWarm = ProcStat.stealPct(steal1, steal2)
+    // whether the graft CDS archive actually MAPPED into this JVM:
+    // -Xshare:auto ignores a stale archive silently, so only the .jsa
+    // mapping proves the cold path had it (the JDK's own classes.jsa is
+    // always mapped, hence the name match)
     val cdsLoaded =
       try scala.io.Source.fromFile("/proc/self/maps").getLines()
         .exists(l => l.contains("graft-cds") && l.contains(".jsa"))
       catch { case _: Throwable => false }
-    val json =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":${q(sfDir)},"n_queries":${results.size},"n_errors":${errors.size},"n_regressions":${regressions.size},"n_flags_cleared":$nFlagsCleared,"window_drift_alarm":$driftAlarm,"compound_drift_alarm":$compoundAlarm,"cpu_vs_floor_norm":${r3(normNow)},"cds_archive_loaded":$cdsLoaded,"cold_total":${r3(coldTotal)}$prevColdCmp,"memo_total_s":${r3(memoTotal)},"cpu_total":${r3(cpuTotal)},"cpu_vs_floor":${r3(cpuVsFloor)}$prevCmp,"window_cpu_infl":${r3(windowInfl)},"wall_vs_floor_indicator":${r3(wallVsFloor)},"steal_warm_pct":${r3(stealWarm)},"steal_cold_pct":${r3(stealCold)},"queries":$qs,"errors":$errsShort,"detail":"bench_detail.json"}"""
-    def jmap(m: Map[String, Double]): String =
-      m.map { case (k, v) => q(k) + ":" + v }.mkString("{", ",", "}")
-    // scaling exponents from tools.ScaleProbe (run on demand; committed
-    // artifact) ride along in the per-round detail record
-    def sideArtifact(name: String): String = {
-      val p = java.nio.file.Paths.get(name)
-      if (java.nio.file.Files.exists(p))
-        new String(java.nio.file.Files.readAllBytes(p), "UTF-8").trim
-      else "null"
-    }
-    val scaling = sideArtifact("scale_probe.json")
-    // ingest-path throughput (tools.IngestProbe: single dense sink vs
-    // bucketed PartitionedLog sinks) rides along the same way
-    val ingest = sideArtifact("ingest_probe.json")
-    // bucketed-state-store read-path evidence (tools.TwinStoreProbe)
-    val twinstore = sideArtifact("twinstore_probe.json")
-    // root-cause notes for confirmed regressions (tools/RegressionBisect
-    // runs, committed by hand) ride along so the verdict on a red number
-    // lives in the same artifact that raised it
-    val regNotes = sideArtifact("regression_analysis.json")
-    // cold-gap attribution: cold_total − warm total decomposes into the
-    // ledgered one-time memo builds (memo_build_s) plus per-query
-    // first-run overhead (codegen/JIT compilation + shuffle-file
-    // creation), enumerated here as cold−warm per query so any future
-    // cold-number movement is attributable without a new investigation
-    val coldGap = cold.flatMap { case (k, cv) =>
-      results.get(k).map(w => k -> (cv.wall - w.wall)) }
-    val coldGapTotal = coldGap.values.sum
-    val coldGapTop = coldGap.toSeq.sortBy(-_._2).take(15)
-      .map { case (k, v) => q(k) + ":" + r3(v) }.mkString("{", ",", "}")
+    val memoTotal = memoCosts.values.sum
+    val total = warm.values.map(_.wall).sum
+    val errs = errors.map { case (k, v) => q(k) + ":" + q(v) }.mkString("{", ",", "}")
     val detail =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${jmap(results.map { case (k, v) => k -> v.wall })},"queries_cpu":${jmap(results.map { case (k, v) => k -> v.cpu })},"errors":$errs,"n_errors":${errors.size},"sf":${q(sfDir)},"cold_total":$coldTotal,"cold_cpu_total":$coldCpuTotal,"cold_jit_s":$coldJitS,"cold_gc_s":$coldGcS,"window_drift_alarm":$driftAlarm,"compound_drift_alarm":$compoundAlarm,"cpu_vs_floor_norm":$normNow,"cds_archive_loaded":$cdsLoaded,"cpu_total":$cpuTotal,"cpu_vs_floor":$cpuVsFloor,"window_cpu_infl":$windowInfl,"wall_vs_floor_indicator":$wallVsFloor,"steal_warm_pct":$stealWarm,"steal_cold_pct":$stealCold,"n_regressions":${regressions.size},"n_flags_cleared":$nFlagsCleared,"regressions":$regs,"regression_analysis":$regNotes,"cold_queries":${jmap(cold.map { case (k, v) => k -> v.wall })},"cold_queries_cpu":${jmap(cold.map { case (k, v) => k -> v.cpu })},"memo_build_s":${jmap(memoCosts)},"memo_total_s":$memoTotal,"cold_minus_warm_total":$coldGapTotal,"cold_minus_warm_top":$coldGapTop,"cold_gap_note":"cold_total - warm total = memo_total_s (one-time memo builds, itemized in memo_build_s) + per-query first-run codegen/JIT + shuffle-file creation, itemized as cold_queries[k] - queries[k] (top gaps in cold_minus_warm_top). CAUTION (r14 attribution, cold_attrib.json): cold_jit_s cpu-seconds of JIT-compiler churn run CONCURRENTLY with the cold pass and land on whichever query is executing — per-query cold gaps are run-random under window pressure; only the bracketed totals (and the #aggregates cold series) are comparable across runs","scaling":$scaling,"ingest":$ingest,"twinstore":$twinstore}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","sf":${q(sfDir)},"queries":${jmap(warm.map { case (k, v) => k -> v.wall })},"queries_cpu":${jmap(warm.map { case (k, v) => k -> v.cpu })},"errors":$errs,"n_errors":${errors.size},"cpu_total":${warm.values.map(_.cpu).sum},"cold_total":${cold.values.map(_.wall).sum},"cold_cpu_total":${cold.values.map(_.cpu).sum},"cold_jit_s":$coldJitS,"cold_gc_s":$coldGcS,"cold_queries":${jmap(cold.map { case (k, v) => k -> v.wall })},"cold_queries_cpu":${jmap(cold.map { case (k, v) => k -> v.cpu })},"memo_build_s":${jmap(memoCosts)},"memo_total_s":$memoTotal,"cds_archive_loaded":$cdsLoaded,"steal_warm_pct":$stealWarm,"steal_cold_pct":$stealCold}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get("bench_detail.json"),
       (detail + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () } // detail dump is best-effort
@@ -575,7 +123,8 @@ object Bench {
     // last line on stdout, after Spark's shutdown chatter (which goes to
     // stderr) — the driver parses this line (showSuccess := false keeps
     // sbt from printing "[success] ..." after it)
-    System.out.println(json)
+    System.out.println(summaryLine(sfDir, warm, cold, errors.toSeq, memoTotal,
+      stealWarm, stealCold, cdsLoaded))
     System.out.flush()
   }
 }

@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-
 import graft.append.{Appender, ProposedEvent}
 import graft.log.EventLog
 import graft.model._
@@ -20,13 +18,7 @@ final case class DemoCount(count: Long)
  */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(cpus = 4).appName("graft-demo").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val logDir = Files.createTempDirectory("graft-demo-log").toString

@@ -2,8 +2,7 @@ package graft.util
 
 /**
  * Process-CPU and host-steal readings shared by the measurement tools
- * (`Bench` carries its own copies for historical reasons; the probes use
- * this). This VM's hypervisor steal is bimodal (the same workload has
+ * (`Bench`, the probes and the perfbench harness). This VM's hypervisor steal is bimodal (the same workload has
  * been observed at 5.1s clean / 15-28s stolen); stolen cycles never
  * appear in process CPU time, so CPU seconds are the stable per-workload
  * cost while wall seconds carry the noise, and the /proc/stat steal

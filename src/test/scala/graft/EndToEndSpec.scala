@@ -65,4 +65,14 @@ class EndToEndSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.getMap[String, Long](1)("k")).toMap
     assert(st == Map("orders" -> (1 + 2 + 3 + 4 + 5L), "users" -> (1 + 2 + 3L)))
   }
+
+  test("the engine session carries the GraftSession conf") {
+    // static conf lands in the SparkConf at session creation
+    val conf = spark.sparkContext.getConf
+    assert(conf.get("spark.sql.extensions") == "graft.GraftExtensions")
+    assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(conf.get("spark.sql.codegen.cache.maxEntries") == "20000")
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+  }
 }

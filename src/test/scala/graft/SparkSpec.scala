@@ -11,20 +11,10 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
+    // the engine conf at a fixed local[4], so results do not depend on
+    // the host's core count
+    val s = GraftSession.builder(cpus = 4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // tolerate either fixture ts encoding: timestamp[us] loads natively;
-      // legacy int64-nanos loads as long and Fixture.raw normalizes it
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // keep every suite's generated classes resident (the default
-      // 100-entry cache cycles across 380+ tests, re-paying Janino+JIT)
-      .config("spark.sql.codegen.cache.maxEntries", "20000")
       // managed (bucketed) test tables land in a throwaway warehouse
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
